@@ -32,6 +32,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    (`tools.NearDupScaleProbe <hdfs|rocksdb> <reps...>`). Switch
   *    there only when resident BYTES per store threaten executor heap —
   *    RocksDB's off-heap capacity, not its commit speed.
+  * Both crossovers were measured while every local checkpoint file still
+  * cost a `chmod` fork and every rename a `readlink` fork (below). Those
+  * forks weighed on HDFSBacked's many small delta/snapshot files more than
+  * on RocksDB's changelog. Since the in-process binding the figures are
+  * unverified: the crossovers may have moved.
+  *
+  * Local file system binding (always on): `fs.file.impl` and
+  * `fs.AbstractFileSystem.file.impl` point at [[graft.fs.NioLocalFileSystem]]
+  * and [[graft.fs.NioLocalFs]]. The Spark distribution ships no libhadoop,
+  * so Hadoop's `RawLocalFileSystem` forks `chmod` for every file or
+  * directory it creates and `readlink` for both ends of every FileContext
+  * rename. A streaming micro-batch writes its offset and commit log and one
+  * delta per stateful partition, each as temp file + rename, and each with
+  * a Hadoop `.crc` and a Spark checkpoint checksum file beside it, which
+  * doubles the file count. One 10 s benchmark catch-up run on a 4-core
+  * host forked 3,853 processes (3,064 `readlink`, 785 `chmod`); with the
+  * binding it forks 5, none for checkpoints, and each stateful
+  * operator's commit falls ~20×.
+  * The binding does both calls through `java.nio.file` and leaves the
+  * bytes, the checksums and the rename protocol as they were (SCALING.md,
+  * "Fork-free checkpoint I/O").
+  * Scope: FileContext instances are not cached, so every checkpoint file
+  * manager gets the binding. `FileSystem.get` is cached per scheme and
+  * user, so a `file:` FileSystem created in this JVM before the session
+  * (with a configuration that lacks the key) keeps the stock class for
+  * FileSystem-API callers.
   */
 object GraftSession {
 
@@ -63,6 +89,8 @@ object GraftSession {
       // events.parquet carries TIMESTAMP(NANOS) which Spark has no native
       // type for; read the raw int64 nanos and convert in Tables.load.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.fs.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.fs.NioLocalFs].getName)
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builderDefaults(SparkSession.builder().master(s"local[$cores]").appName("graft"), cores)
@@ -230,7 +258,10 @@ object Tables {
         if (cur != null && cur._1 == fp) cur._2
         else {
           val sch = spark.read.parquet(path).schema
-          schemaCache.put(path, (fp, sch))   // replaces any superseded entry
+          // a write during inference may have paired `fp` with another
+          // file's schema: serve it this once, cache it only if unchanged
+          if (localFingerprint(path).contains(fp))
+            schemaCache.put(path, (fp, sch))   // replaces any superseded entry
           sch
         }
     }

@@ -1450,7 +1450,7 @@ object VectorSearch {
     * synchronization makes parallel member futures share one build,
     * and the eager localCheckpoint inside the init IS the
     * materialization barrier the members previously each paid. */
-  private final class EvalBases(s: SparkSession, dir: String) {
+  private[operators] final class EvalBases(s: SparkSession, dir: String) {
     lazy val e: DataFrame = normed(s, dir)
     lazy val assigned: (DataFrame, DataFrame) = {
       val (a, c) = ivfFlatAssignFrom(s, e)
@@ -1462,13 +1462,14 @@ object VectorSearch {
     * rows identical to its standalone catalog query (the same
     * expressions over the same deterministic bases; the standalone Q
     * bodies delegate to the same Of/From-suffixed helpers). */
-  private def evalMember(
+  private[operators] def evalMember(
       s: SparkSession, name: String): EvalBases => DataFrame = name match {
     case "ivf_flat" => b => rankTopK(s, ivfFlatCandidatesOf(s, b.assigned), 10)
     case "ivf_retrained" => b => annIvfRetrainedOf(s, b.e, b.assigned)
     case "ivfpq" => b => annIvfPqOf(s, b.assigned._1, b.assigned._2)
     case "lsh" => b => rankTopK(s, lshCandidatesFrom(s, b.e), 10)
     case "pq_adc" => b => pqAdcFrom(s, b.e)
+    case other => throw new IllegalArgumentException(s"unknown eval member: $other")
   }
 
   /** the eval body over an explicit member list — each member's

@@ -34,7 +34,14 @@ import graft.streaming.ShardTopology
   *    (`GreaterThan(ts, lastSeen)` / `GreaterThanOrEqual`), evaluating
   *    them inside the partition reader — rows are dropped at the
   *    "cursor", exactly like the Bson `$gt` filter the reference sends
-  *    to mongod, and never cross the source boundary.
+  *    to mongod, and never cross the source boundary. BATCH reads only:
+  *    Spark 4.1.2's `MicroBatchExecution` builds the streaming scan with
+  *    `newScanBuilder(options).build()` and never calls `pushFilters`,
+  *    so a micro-batch reader gets no filters and every row reaches the
+  *    query's own `Filter` above the scan. Filtering unconditionally in
+  *    the reader was not taken up: the reader alone costs ~3.6 µs/line
+  *    against ~2.4 µs/line with O3 applied at the cursor, about 5 ms of
+  *    a 4,000-line task.
   *  - resumable offsets (O4/O8, `MongoDBOplogSource.java:130-139`): the
   *    streaming Offset is the last consumed FILE NAME per member
   *    (compared with a numeric-aware ordering, so `b9 < b10` even

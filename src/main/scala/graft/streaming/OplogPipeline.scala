@@ -30,8 +30,10 @@ object OplogPipeline {
   /** O3: the static predicate the reference pushes into `find()`
     * (`MongoOplogTailMapper.java:90-94`): drop no-ops, the offset
     * table's own writes, and shard-migration internals. On a file
-    * source Catalyst pushes this to the scan; on a connector it maps to
-    * `SupportsPushDownFilters`. */
+    * source Catalyst pushes this to the scan; on a connector BATCH read
+    * it maps to `SupportsPushDownFilters`. A streaming connector read
+    * gets no pushdown (Spark's micro-batch planner never offers filters
+    * to a DSv2 scan), so there it runs as a Filter above the scan. */
   def staticFilter(df: DataFrame): DataFrame =
     df.filter(col("op") =!= "n" &&
       col("ns") =!= "time_d.repl_time" &&
@@ -48,8 +50,9 @@ object OplogPipeline {
 
   /** the native-connector source (O1+O2 as an engine component): the
     * DSv2 oplog connector plans one partition per replica member from a
-    * topology descriptor and pushes the O3 filter into its readers —
-    * see [[graft.sources.OplogSourceProvider]]. */
+    * topology descriptor. Its readers apply pushed O3 filters on batch
+    * reads only; on this streaming read [[staticFilter]] runs above the
+    * scan — see [[graft.sources.OplogSourceProvider]]. */
   def connectorSource(spark: SparkSession, root: String, topology: String): DataFrame =
     spark.readStream
       .format("graft.sources.OplogSourceProvider")

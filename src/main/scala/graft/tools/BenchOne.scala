@@ -1,6 +1,14 @@
 package graft.tools
 import org.apache.spark.sql.SparkSession
 object BenchOne {
+  /** True median: the mean of the two middle values for an even count
+    * (indexing `size / 2` alone reports the upper middle). */
+  def median(xs: Seq[Double]): Double = {
+    require(xs.nonEmpty, "median of no values")
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val spark = graft.GraftSession.builderDefaults(
@@ -17,15 +25,9 @@ object BenchOne {
         println(f"[benchone] $name run$i $t%.2f s")
         t
       }
-      val warm = ts.drop(1).sorted
-      // true median: average the two middle elements for even sizes
-      // (indexing size/2 alone reported the upper-middle — round-19
-      // ADVICE: biased for SPARK_GRAFT_BENCHONE_RUNS-driven even counts)
-      val median =
-        if (warm.isEmpty) 0.0
-        else if (warm.size % 2 == 1) warm(warm.size / 2)
-        else (warm(warm.size / 2 - 1) + warm(warm.size / 2)) / 2.0
-      if (warm.nonEmpty) println(f"[benchone] $name warm_median=$median%.3f warm_min=${warm.min}%.3f")
+      val warm = ts.drop(1)
+      if (warm.nonEmpty)
+        println(f"[benchone] $name warm_median=${median(warm)}%.3f warm_min=${warm.min}%.3f")
     }
     spark.stop()
   }

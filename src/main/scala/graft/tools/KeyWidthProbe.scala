@@ -138,12 +138,8 @@ object KeyWidthProbe {
         narrow += nr
         println(f"""{"probe":"key_width_run","round":$i,"wide_rows_per_sec":$wr%.0f,"narrow_rows_per_sec":$nr%.0f,"emitted_wide":$we,"emitted_narrow":$ne}""")
       }
-      def median(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        s(s.length / 2)
-      }
-      val mw = median(wide.result())
-      val mn = median(narrow.result())
+      val mw = BenchOne.median(wide.result())
+      val mn = BenchOne.median(narrow.result())
       println(f"""{"probe":"key_width_summary","rounds":$rounds,"ops":$ops,"wide_median_rows_per_sec":$mw%.0f,"narrow_median_rows_per_sec":$mn%.0f,"wide_over_narrow":${mw / math.max(1e-9, mn)}%.3f,"emitted_mismatch":$emittedMismatch}""")
     } finally {
       spark.stop()

@@ -34,7 +34,7 @@ object ServeMeterProbe {
         ()
       }
     }
-    println(f"[servemeter] best=${rates.max}%.0f median=${rates.sorted.apply(rates.size / 2)}%.0f over $n attempts")
+    println(f"[servemeter] best=${rates.max}%.0f median=${BenchOne.median(rates)}%.0f over $n attempts")
     spark.stop()
   }
 }

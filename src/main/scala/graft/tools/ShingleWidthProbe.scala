@@ -40,8 +40,8 @@ object ShingleWidthProbe {
       println(f"[shinglewidth] round $r pinned=$pinned%.2f unpinned=$unpinned%.2f (order=${if (pinFirst) "P-U" else "U-P"})")
       (pinned, unpinned)
     }
-    val mp = res.map(_._1).sorted.apply(res.size / 2)
-    val mu = res.map(_._2).sorted.apply(res.size / 2)
+    val mp = BenchOne.median(res.map(_._1))
+    val mu = BenchOne.median(res.map(_._2))
     println(f"[shinglewidth] median pinned=$mp%.3f unpinned=$mu%.3f ratio=${mp / mu}%.3f over $rounds rounds (${queries.mkString(",")})")
     spark.stop()
   }

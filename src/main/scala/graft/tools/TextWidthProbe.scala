@@ -44,8 +44,8 @@ object TextWidthProbe {
       (p, u)
     }
     queries.foreach { q =>
-      val mp = res.map(_._1(q)).sorted.apply(res.size / 2)
-      val mu = res.map(_._2(q)).sorted.apply(res.size / 2)
+      val mp = BenchOne.median(res.map(_._1(q)))
+      val mu = BenchOne.median(res.map(_._2(q)))
       println(f"[textwidth] MEDIAN $q pinned=$mp%.3f unpinned=$mu%.3f ratio=${mp / mu}%.3f over $rounds rounds")
     }
     spark.stop()

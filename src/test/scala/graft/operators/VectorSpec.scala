@@ -61,6 +61,11 @@ class VectorSpec extends SparkSuite {
     assert(r.isNullAt(0))
   }
 
+  test("an unknown eval member is a named error") {
+    val e = intercept[IllegalArgumentException](VectorSearch.evalMember(spark, "hnsw"))
+    assert(e.getMessage == "unknown eval member: hnsw")
+  }
+
   test("IVF ANN (KMeans cells, nprobe=2) recall beats the scan fraction") {
     val exact = VectorSearch.topK.run(spark, sf0001).collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(2)).toSet).toMap
